@@ -19,6 +19,7 @@ all engine behavior lives in pipelines.py and below.
 """
 from __future__ import annotations
 
+import os
 import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
@@ -27,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .enrich.gateway import StubGateway
 from .pipelines import (
+    convo_messages,
     read_table,
     run_agents_pipeline,
     run_convo_pipeline,
@@ -35,6 +37,7 @@ from .pipelines import (
     run_tags_pipeline,
     run_ticket_pipeline,
 )
+from .sinks.writers import part_files
 
 
 @dataclass
@@ -53,17 +56,20 @@ class RuntimeTracker:
     runs: list[RouteRun] = field(default_factory=list)
 
     def track(self, route: str, fn: Callable, *args, **kwargs):
+        # ``started`` is the epoch time for the logs; the duration comes
+        # from the monotonic clock, which a wall-clock step cannot skew
         run = RouteRun(route=route, status="running", started=time.time())
         self.runs.append(run)
+        t0 = time.perf_counter()
         try:
             out = fn(*args, **kwargs)
         except Exception as e:
             run.status = "failed"
             run.error = f"{type(e).__name__}: {e}"
-            run.wall_sec = time.time() - run.started
+            run.wall_sec = time.perf_counter() - t0
             raise
         run.status = "complete"
-        run.wall_sec = time.time() - run.started
+        run.wall_sec = time.perf_counter() - t0
         return out
 
     def logs(self) -> list[dict]:
@@ -98,6 +104,9 @@ class Engine:
         self.base_dir = base_dir
         self.gateway = gateway or StubGateway()
         self.tracker = RuntimeTracker()
+        # messages.parquet part files appended since the last successful
+        # convo pass; None (a fresh Engine) means unknown: a full pass
+        self._unanalysed: list[str] | None = None
         # same route names as the reference's scheduler order
         # (api/app.py:45-49: agents → tags → tickets → convo → logs)
         self.routes: dict[str, Callable[..., object]] = {
@@ -127,15 +136,35 @@ class Engine:
     ):
         run_ticket_pipeline(self.spark, raw_tickets, self.base_dir, now=now)
         agents = read_table(self.spark, self.base_dir, "agents")
-        return run_message_pipeline(
+        before = part_files(self.base_dir, "messages")
+        out = run_message_pipeline(
             self.spark, raw_messages, agents, self.base_dir, now=now
         )
+        if self._unanalysed is not None:
+            self._unanalysed += sorted(
+                part_files(self.base_dir, "messages") - before
+            )
+        return out
 
     def _process_convo(self):
+        """Re-analyse the conversations that got messages through this
+        Engine since its last convo pass; a fresh Engine, or a recorded
+        file since rewritten (e.g. by ``compact``), makes it a full pass.
+        Assumes this Engine is the only writer of ``messages``."""
         messages = read_table(self.spark, self.base_dir, "messages")
-        return run_convo_pipeline(
-            self.spark, messages, self.gateway, self.base_dir
+        pending = self._unanalysed
+        if pending is None or not all(map(os.path.exists, pending)):
+            changed = None
+        elif pending:
+            changed = convo_messages(self.spark.read.parquet(*pending))
+        else:
+            changed = messages.limit(0)
+        out = run_convo_pipeline(
+            self.spark, messages, self.gateway, self.base_dir,
+            changed_keys=changed,
         )
+        self._unanalysed = []
+        return out
 
     def _process_logs(self, run_keys: DataFrame, existing_keys: DataFrame):
         analyzed = read_table(self.spark, self.base_dir, "convo_analysis")

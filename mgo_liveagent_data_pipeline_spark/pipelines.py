@@ -10,9 +10,18 @@ POST /process-logs → run_logs_pipeline (ExtractionLogger.py:95-176)
 
 Each stage is lazy until its sink write; incremental semantics come from
 the staged-MERGE upsert (K4) exactly like the reference's BigQuery MERGE.
+
+The convo route is incremental too: given the keys of the conversations
+with new messages since the last pass (``api.Engine`` tracks them), it
+re-analyses only those, each over all its messages, and keeps the stored
+analysis of every other conversation — the reference analyses only the
+run's recent tickets (Extractor.py:256-263). History gets one snapshot
+of the merged current state per pass; switching it to the analysed rows
+only, as the reference's history holds, is deferred.
 """
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -65,18 +74,38 @@ def run_tags_pipeline(
     return overwrite(process_tags(raw_tags), base_dir, "tags")
 
 
+def convo_messages(messages: DataFrame) -> DataFrame:
+    """P4: the messages a conversation is made of — manual (``M``)
+    messages in text (``T``) format (Extractor.py:256-263)."""
+    return messages.where(
+        (F.col("message_type") == "M") & (F.col("message_format") == "T")
+    )
+
+
 def run_convo_pipeline(
     spark: SparkSession,
     messages: DataFrame,
     gateway: Callable[[str], tuple[str, int, str]],
     base_dir: str,
+    changed_keys: DataFrame | None = None,
 ) -> str:
-    """LLM conversation analysis: P4 filter → A5+U1 applyInPandas →
-    F11 schedule fusion → K5 history append → K4 upsert
-    (Extractor.py:254-327)."""
-    convo_msgs = messages.where(
-        (F.col("message_type") == "M") & (F.col("message_format") == "T")
-    )
+    """LLM conversation analysis: P4 filter → A5+U1 mapInPandas →
+    F11 schedule fusion → K5 history append → current-state overwrite
+    (Extractor.py:254-327).
+
+    ``changed_keys`` (a ``ticket_id`` column) names the conversations
+    with new messages since the last pass. Only those are analysed, each
+    once and over all its messages in ``messages``; ``None`` analyses
+    every conversation. The merged state — the stored rows of every key
+    not analysed plus the new analysis — is appended to
+    ``convo_analysis_history`` as this pass's snapshot, then replaces
+    ``convo_analysis``.
+    """
+    convo_msgs = convo_messages(messages)
+    if changed_keys is not None:
+        convo_msgs = convo_msgs.join(
+            changed_keys.select("ticket_id"), on="ticket_id", how="left_semi"
+        )
     analyzed = analyze_conversations(
         convo_msgs,
         gateway,
@@ -89,8 +118,25 @@ def run_convo_pipeline(
         "schedule_ts",
         fuse_schedule(F.col("schedule_date"), F.col("schedule_time")),
     )
-    history_append(spark, analyzed, base_dir, "convo_analysis")
-    return upsert(spark, analyzed, base_dir, "convo_analysis", "ticket_id")
+    # both writes below read the analysis: materialise it, so the
+    # gateway is called once per analysed conversation
+    analyzed = analyzed.persist()
+    try:
+        analyzed.count()
+        merged = analyzed
+        path = table_path(base_dir, "convo_analysis")
+        if os.path.exists(path):
+            merged = (
+                spark.read.parquet(path)
+                .join(analyzed.select("ticket_id"), on="ticket_id", how="left_anti")
+                .unionByName(analyzed)
+            )
+        history_append(spark, merged, base_dir, "convo_analysis")
+        # safe to read-while-writing: the staged overwrite reads the old
+        # files before its swap
+        return overwrite(merged, base_dir, "convo_analysis")
+    finally:
+        analyzed.unpersist()
 
 
 def run_logs_pipeline(

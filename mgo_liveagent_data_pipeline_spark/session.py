@@ -26,6 +26,22 @@ MANILA_TZ = "Asia/Manila"
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+_MAX_DRIVER_MEMORY_MB = 48 * 1024
+
+
+def default_driver_memory() -> str:
+    """``SPARK_DRIVER_MEMORY`` if set, else half the host's physical
+    memory capped at 48g: a heap larger than the host gets the JVM
+    OOM-killed, and in local mode the driver holds every executor."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    try:
+        ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    except (ValueError, OSError, AttributeError):
+        return "48g"
+    return f"{max(1024, min(_MAX_DRIVER_MEMORY_MB, ram_mb // 2))}m"
+
 
 def get_spark(
     app_name: str = "mgo_liveagent_data_pipeline_spark",
@@ -58,7 +74,7 @@ def get_spark(
         # 128 MB input splits: right-sized tasks at any SF.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -47,10 +47,22 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 
 def table_path(base_dir: str, name: str) -> str:
     return os.path.join(base_dir, f"{name}.parquet")
+
+
+def part_files(base_dir: str, name: str) -> set[str]:
+    """Paths of the table's parquet part files (empty if it is absent)."""
+    path = table_path(base_dir, name)
+    if not os.path.isdir(path):
+        return set()
+    return {
+        os.path.join(path, f) for f in os.listdir(path)
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    }
 
 
 def ensure_table(
@@ -129,23 +141,38 @@ def upsert(
     repartitionByRange(key) → atomic overwrite. With Delta this whole
     function is ``MERGE INTO t USING s ON t.key=s.key WHEN MATCHED THEN
     UPDATE SET * WHEN NOT MATCHED THEN INSERT *``.
+
+    The merge plan names ``source`` twice (key set and union), so a
+    merge into an existing table materialises it once first: a lazy
+    source (a REST read, a ``mapInPandas`` enrichment) runs once per
+    upsert, and both legs see the same rows.
     """
     path = table_path(base_dir, name)
-    if not os.path.exists(path):
-        # empty-target fast path: an absent table anti-joins to nothing,
-        # so MERGE degenerates to writing the source — skips the
-        # create-empty + read + anti-join jobs on a table's first batch
-        merged = source
-    else:
-        target = spark.read.parquet(path)
-        merged = target.join(
-            source.select(key).distinct(), on=key, how="left_anti"
-        ).unionByName(source)
-    if num_range_partitions:
-        merged = merged.repartitionByRange(num_range_partitions, F.col(key))
-    # safe to read-while-writing: the staging write happens before the
-    # swap, so the lazy plan still sees the old target files
-    _atomic_overwrite(merged, path)
+    exists = os.path.exists(path)
+    # a source the caller already cached is the caller's to release
+    owned = exists and source.storageLevel == StorageLevel.NONE
+    if owned:
+        source = source.persist()
+    try:
+        if not exists:
+            # empty-target fast path: an absent table anti-joins to
+            # nothing, so MERGE degenerates to writing the source — skips
+            # the create-empty + read + anti-join jobs on a first batch
+            merged = source
+        else:
+            source.count()
+            target = spark.read.parquet(path)
+            merged = target.join(
+                source.select(key).distinct(), on=key, how="left_anti"
+            ).unionByName(source)
+        if num_range_partitions:
+            merged = merged.repartitionByRange(num_range_partitions, F.col(key))
+        # safe to read-while-writing: the staging write happens before the
+        # swap, so the lazy plan still sees the old target files
+        _atomic_overwrite(merged, path)
+    finally:
+        if owned:
+            source.unpersist()
     return path
 
 
@@ -1332,20 +1359,13 @@ def compact(
     table was already under the threshold).
     """
     path = table_path(base_dir, name)
-
-    def _n_parts() -> int:
-        return sum(
-            1 for f in os.listdir(path)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        )
-
     with table_lease(base_dir, name, ttl=lease_ttl):
-        n = _n_parts()
+        n = len(part_files(base_dir, name))
         if n <= max_files:
             return n
         df = spark.read.parquet(path)
         _atomic_overwrite(df.repartition(target_files), path)
-        return _n_parts()
+        return len(part_files(base_dir, name))
 
 
 def write_bucketed(

@@ -18,19 +18,22 @@ def engine(spark, tmp_path):
     return Engine(spark, str(tmp_path))
 
 
-def _seed(spark, engine):
+def _seed(spark, engine, msgs=(("t1", "m1", "need help"),)):
+    """One tickets-and-messages dispatch: a ticket and an M/T message per
+    ``(ticket_id, message_id, text)`` in ``msgs``."""
     agents = spark.createDataFrame(
         [("a1", "Alice", "a@x.ph", None)],
         "id string, name string, email string, last_pswd_change timestamp",
     )
     tickets = spark.createDataFrame(
-        [("t1", "open", dt.datetime(2024, 1, 1))],
+        [(t, "open", dt.datetime(2024, 1, 1)) for t in sorted({m[0] for m in msgs})],
         "id string, status string, date_created timestamp",
     )
     messages = spark.createDataFrame(
         [
-            ("t1", "Owen", "a1", "m1", "u9", "M", "T",
-             dt.datetime(2024, 1, 1, 10, 0), "need help"),
+            (t, "Owen", "a1", m, "u9", "M", "T",
+             dt.datetime(2024, 1, 1, 10, int(m[1:])), text)
+            for t, m, text in msgs
         ],
         "ticket_id string, owner_name string, agentid string, message_id string,"
         "userid string, message_type string, message_format string,"
@@ -42,6 +45,12 @@ def _seed(spark, engine):
         raw_tickets=tickets,
         raw_messages=messages,
         now=_now(),
+    )
+
+
+def _convo(engine):
+    return sorted(
+        map(tuple, engine.dispatch("fetch", table="convo_analysis", limit=100).collect())
     )
 
 
@@ -84,3 +93,63 @@ def test_tags_route_nan_fill_truncate(spark, engine):
     assert len(rows) == 2
     assert rows["g1"]["name"] == ""  # NaN-filled
     assert rows["g2"]["color"] == "red"
+
+
+def test_fresh_engine_does_full_convo_pass(spark, tmp_path, counting_gateway):
+    gateway, calls = counting_gateway
+    base = str(tmp_path)
+    first = Engine(spark, base)
+    _seed(spark, first, (("t1", "m1", "need help"), ("t2", "m2", "hello")))
+    first.dispatch("extract/process-convo")
+
+    # a new Engine does not know which conversations the tables hold
+    # unanalysed, so even with one changed ticket it analyses them all
+    fresh = Engine(spark, base, gateway=gateway)
+    _seed(spark, fresh, (("t1", "m3", "at 3PM please"),))
+    fresh.dispatch("extract/process-convo")
+    assert calls() == 2
+    assert [r[0] for r in _convo(fresh)] == ["t1", "t2"]
+    # its next pass re-analyses only what changed since
+    _seed(spark, fresh, (("t2", "m4", "thanks"),))
+    fresh.dispatch("extract/process-convo")
+    assert calls() == 2 + 1
+
+
+def test_failed_convo_pass_keeps_pending_tickets(
+    spark, tmp_path, monkeypatch, counting_gateway
+):
+    import mgo_liveagent_data_pipeline_spark.pipelines as pipelines
+
+    gateway, calls = counting_gateway
+    engine = Engine(spark, str(tmp_path), gateway=gateway)
+    _seed(spark, engine)
+    engine.dispatch("extract/process-convo")
+    assert calls() == 1
+    _seed(spark, engine, (("t2", "m2", "hello"),))
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("history write failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(pipelines, "history_append", boom)
+        with pytest.raises(RuntimeError, match="history write failed"):
+            engine.dispatch("extract/process-convo")
+    assert [r[0] for r in _convo(engine)] == ["t1"]
+    n = calls()
+    engine.dispatch("extract/process-convo")
+    assert calls() == n + 1  # t2 again, not t1
+    assert [r[0] for r in _convo(engine)] == ["t1", "t2"]
+    assert engine.tracker.summary()["extract/process-convo"]["failed"] == 1
+
+
+def test_convo_pass_without_new_messages_keeps_state(
+    spark, tmp_path, counting_gateway
+):
+    gateway, calls = counting_gateway
+    engine = Engine(spark, str(tmp_path), gateway=gateway)
+    _seed(spark, engine, (("t1", "m1", "need help"), ("t2", "m2", "hello")))
+    engine.dispatch("extract/process-convo")
+    before = _convo(engine)
+    engine.dispatch("extract/process-convo")
+    assert calls() == 2
+    assert _convo(engine) == before

@@ -134,6 +134,55 @@ def test_convo_pipeline_history_and_upsert(spark, tmp_path, agents, raw_messages
     assert read_table(spark, base, "convo_analysis_history").count() == 4
 
 
+def test_convo_delta_pass_equals_full_pass(
+    spark, tmp_path, agents, raw_messages, counting_gateway
+):
+    """A pass over the changed conversations only gives the current state
+    a full re-analysis gives, calls the gateway once per changed
+    conversation, and appends the merged state to history."""
+    from mgo_liveagent_data_pipeline_spark.sinks.writers import part_files
+
+    gateway, calls = counting_gateway
+    batch2 = spark.createDataFrame(
+        [
+            # a new message on an existing ticket, and a new ticket
+            ("t1", "Owen Owner", "a1", "m6", "u9", "M", "T",
+             dt.datetime(2024, 1, 3, 8, 0), "see you at 3PM"),
+            ("t3", "Quinn Q", "a1", "m7", "u5", "M", "T",
+             dt.datetime(2024, 1, 3, 9, 0), "is my car ready"),
+        ],
+        raw_messages.schema,
+    )
+    delta, full = str(tmp_path / "delta"), str(tmp_path / "full")
+
+    def rows(base, name):
+        return sorted(map(tuple, read_table(spark, base, name).collect()))
+
+    run_message_pipeline(spark, raw_messages, agents, delta, now=NOW())
+    run_convo_pipeline(spark, read_table(spark, delta, "messages"), gateway, delta)
+    assert calls() == 2  # t1, t2
+    first = rows(delta, "convo_analysis")
+    before = part_files(delta, "messages")
+    run_message_pipeline(spark, batch2, agents, delta, now=NOW())
+    added = sorted(part_files(delta, "messages") - before)
+    changed = spark.read.parquet(*added).select("ticket_id")
+    run_convo_pipeline(
+        spark, read_table(spark, delta, "messages"), gateway, delta,
+        changed_keys=changed,
+    )
+    assert calls() == 2 + 2  # t1, t3 only
+
+    for batch in (raw_messages, batch2):
+        run_message_pipeline(spark, batch, agents, full, now=NOW())
+    run_convo_pipeline(spark, read_table(spark, full, "messages"), StubGateway(), full)
+
+    got = rows(delta, "convo_analysis")
+    assert got == rows(full, "convo_analysis")
+    assert [r[0] for r in got] == ["t1", "t2", "t3"]
+    # history holds one snapshot of the merged state per pass
+    assert rows(delta, "convo_analysis_history") == sorted(first + got)
+
+
 def test_elt_parity_ledger_invariants(spark):
     """The composed reference-lifecycle chain (plans/parity.py): stage
     hand-offs are exact (each stage's rows_in is the PREVIOUS stage's

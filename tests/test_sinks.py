@@ -55,6 +55,45 @@ def test_upsert_idempotent(spark, tmp_path):
     assert once == twice
 
 
+def test_upsert_runs_lazy_source_once(spark, tmp_path):
+    """The merge reads its source twice (key set and union); a lazy
+    source — here a ``mapInPandas`` stage, like the convo enrichment or a
+    REST read — must still run once per upsert."""
+    tmp = str(tmp_path)
+    seed(spark, tmp, [(1, "old"), (2, "keep")])
+    log = str(tmp_path / "source_calls.log")
+
+    def record(batches):
+        for pdf in batches:
+            with open(log, "a") as f:
+                f.writelines("row\n" for _ in range(len(pdf)))
+            yield pdf
+
+    base = spark.createDataFrame([(1, "new"), (3, "ins"), (4, "ins")], ["id", "v"])
+    src = base.mapInPandas(record, base.schema)
+    upsert(spark, src, tmp, "t", "id")
+    with open(log) as f:
+        assert sum(1 for _ in f) == base.count()
+    got = {r["id"]: r["v"] for r in read(spark, tmp).collect()}
+    assert got == {1: "new", 2: "keep", 3: "ins", 4: "ins"}
+
+
+def test_upsert_keeps_callers_cache(spark, tmp_path):
+    """upsert releases only the cache it made: a source the caller
+    persisted stays cached for the caller's next use."""
+    from pyspark.storagelevel import StorageLevel
+
+    tmp = str(tmp_path)
+    seed(spark, tmp, [(1, "old")])
+    src = spark.createDataFrame([(1, "new"), (2, "ins")], ["id", "v"]).persist()
+    try:
+        upsert(spark, src, tmp, "t", "id")
+        assert src.storageLevel != StorageLevel.NONE
+    finally:
+        src.unpersist()
+    assert {r["id"]: r["v"] for r in read(spark, tmp).collect()} == {1: "new", 2: "ins"}
+
+
 def test_upsert_creates_missing_target(spark, tmp_path):
     tmp = str(tmp_path)
     src = spark.createDataFrame([(1, "a")], ["id", "v"])
